@@ -22,7 +22,7 @@ import graft.sources.Tables
   */
 object Ctr {
 
-  private[graft] val impSchema = StructType(Seq(
+  private val impSchema = StructType(Seq(
     StructField("impressionId", StringType),
     StructField("referrer", StringType),
     StructField("adId", StringType)))
@@ -32,9 +32,8 @@ object Ctr {
 
   /** Deterministic impression log derived from events: every event is
     * an impression; referrer/adId from stable columns. The "ts=" prefix
-    * is the noise the reference strips before '{'. (Shared with
-    * tools.Perf so stage timings measure the real pipeline.) */
-  private[graft] def impressionLines(s: SparkSession, dir: String): DataFrame = {
+    * is the noise the reference strips before '{'. */
+  private def impressionLines(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     Tables.events(s, dir).select(concat(
       lit("ts="), $"event_id".cast("string"), lit(" "),

@@ -106,6 +106,41 @@ object Graph {
        |ORDER BY pr_score DESC, nation""".stripMargin
   }
 
+  /** Bellman–Ford to fixpoint — the one relax loop under graph_bfs,
+    * graph_sssp, graph_closeness and graph_betweenness. State is
+    * (root, id, d) for every root × node, d = 0 at the root and `inf`
+    * elsewhere. A round joins the finite frontier to the weighted
+    * edges (src, dst, w) on src, takes MIN(d + w) per (root, dst) and
+    * keeps the smaller of the old and relaxed distance: one join + one
+    * min-aggregate, the MapReduce BFS formulation (BFS is w = 1). The
+    * loop stops when a round changes no distance (a scalar count, as in
+    * Dedup.clusters / pagerank) or after `maxIters` rounds; the state is
+    * node-sized next to the edges, so at scale it broadcasts into the
+    * edge scan, and localCheckpoint truncates each round's lineage.
+    * Unreachable nodes keep d = inf. */
+  private def shortestPaths(s: SparkSession, roots: DataFrame, nodes: DataFrame,
+                            edges: DataFrame, inf: Long, maxIters: Long): DataFrame = {
+    import s.implicits._
+    var dist = roots.crossJoin(nodes)
+      .select($"root", $"id", when($"root" === $"id", 0L).otherwise(inf).as("d"))
+      .localCheckpoint()
+    var changed = 1L
+    var iter = 0L
+    while (changed > 0 && iter < maxIters) {
+      val relaxed = dist.filter($"d" < inf)
+        .join(edges, $"id" === $"src")
+        .groupBy($"root", $"dst").agg(min($"d" + $"w").as("dr"))
+        .select($"root".as("rroot"), $"dst", $"dr")
+      val next = dist.join(relaxed, $"root" === $"rroot" && $"id" === $"dst", "left")
+        .select($"root", $"id", least($"d", coalesce($"dr", lit(inf))).as("d"), $"d".as("old"))
+        .localCheckpoint()
+      changed = next.filter($"d" =!= $"old").count()
+      dist = next.select($"root", $"id", $"d")
+      iter += 1
+    }
+    dist
+  }
+
   /** BFS to FIXPOINT: hop distance from nation 0 over the directed
     * trade graph (the iterative-frontier pattern — label propagation /
     * reachability — as chained relational steps). All-integer state, so
@@ -121,32 +156,15 @@ object Graph {
     * (min over all path lengths, pruned at d < 999 — path lengths
     * beyond |V|-1 can't be shortest).
     *
-    * Scale shape: each iteration is one join edges⋈dist re-keyed by dst
-    * + a min-aggregate (the MapReduce BFS formulation); dist is
-    * node-sized (tiny next to edges) so at scale Spark broadcasts it
-    * into the edge scan, and localCheckpoint truncates per-iteration
-    * lineage exactly as in pagerank. */
+    * Scale shape: the unit-weight case of the shared `shortestPaths`
+    * relax loop from the single root 0. */
   private def graphBfs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val edges = tradeEdges(s, dir)
     val nodes = Tables.nation(s, dir).select($"n_nationkey".as("id"))
     val maxIters = nodes.count() // dim-table scalar: diameter ≤ |V| - 1
     val Inf = 1000000L
-    var dist = nodes.select($"id",
-      when($"id" === 0, 0L).otherwise(Inf).as("d")).localCheckpoint()
-    var changed = 1L
-    var iter = 0L
-    while (changed > 0 && iter < maxIters) {
-      val relaxed = edges
-        .join(dist.select($"id".as("src"), $"d"), "src")
-        .groupBy($"dst").agg(min($"d" + 1L).as("dr"))
-      val next = dist.join(relaxed, $"id" === $"dst", "left")
-        .select($"id", least($"d", coalesce($"dr", lit(Inf))).as("d"), $"d".as("old"))
-        .localCheckpoint()
-      changed = next.filter($"d" =!= $"old").count()
-      dist = next.select($"id", $"d")
-      iter += 1
-    }
+    val dist = shortestPaths(s, Seq(0L).toDF("root"), nodes,
+      tradeEdges(s, dir).withColumn("w", lit(1L)), Inf, maxIters)
     dist.join(broadcast(Tables.nation(s, dir)), $"id" === $"n_nationkey")
       .select($"n_name".as("nation"),
         when($"d" >= Inf, -1L).otherwise($"d").as("hops"))
@@ -362,10 +380,8 @@ object Graph {
     * shortest path has ≤ 24 edges; sums ≤ 24·50 keep the recursion's
     * distinct-(id,d,h) state bounded) and takes the per-node MIN.
     *
-    * Scale shape: per round one join edges⋈dist keyed by src + a
-    * min-aggregate keyed by dst — dist is node-sized so at cluster
-    * scale it broadcasts into the edge scan; localCheckpoint truncates
-    * per-round lineage (pagerank/BFS precedent). */
+    * Scale shape: the shared `shortestPaths` relax loop from the single
+    * root 0 over these weighted edges. */
   private def graphSssp(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val l = Tables.lineitem(s, dir).select($"l_orderkey", $"l_suppkey", $"l_quantity")
@@ -382,21 +398,7 @@ object Graph {
     val nodes = Tables.nation(s, dir).select($"n_nationkey".as("id"))
     val maxIters = nodes.count() - 1 // Bellman–Ford round bound: |V|−1
     val Inf = 1000000000L
-    var dist = nodes.select($"id",
-      when($"id" === 0, 0L).otherwise(Inf).as("d")).localCheckpoint()
-    var changed = 1L
-    var iter = 0L
-    while (changed > 0 && iter < maxIters) {
-      val relaxed = edges
-        .join(dist.select($"id".as("src"), $"d"), "src")
-        .groupBy($"dst").agg(min($"d" + $"w").as("dr"))
-      val next = dist.join(relaxed, $"id" === $"dst", "left")
-        .select($"id", least($"d", coalesce($"dr", lit(Inf))).as("d"), $"d".as("old"))
-        .localCheckpoint()
-      changed = next.filter($"d" =!= $"old").count()
-      dist = next.select($"id", $"d")
-      iter += 1
-    }
+    val dist = shortestPaths(s, Seq(0L).toDF("root"), nodes, edges, Inf, maxIters)
     dist.join(broadcast(Tables.nation(s, dir)), $"id" === $"n_nationkey")
       .select($"n_name".as("nation"),
         when($"d" >= Inf, -1L).otherwise($"d").as("dist"))
@@ -1003,35 +1005,13 @@ object Graph {
     * eccentricity is the max finite hop (−1 for isolated roots). */
   private val BfsInf = 1000000L
 
-  /** Multi-source BFS from every node (the shared pivot-distance
-    * engine under graph_closeness and graph_betweenness): (root, id, d)
-    * with d = BfsInf for unreachable, relaxed to fixpoint. */
+  /** Multi-source BFS from every node (the pivot distances under
+    * graph_closeness and graph_betweenness): (root, id, d) with
+    * d = BfsInf for unreachable. */
   private def pivotDistances(s: SparkSession, edges: DataFrame,
-                             nodes: DataFrame, maxIters: Long): DataFrame = {
-    import s.implicits._
-    val Inf = BfsInf
-    var dist = nodes.select($"id".as("root")).crossJoin(nodes)
-      .select($"root", $"id",
-        when($"root" === $"id", 0L).otherwise(Inf).as("d"))
-      .localCheckpoint()
-    var changed = 1L
-    var iter = 0L
-    while (changed > 0 && iter < maxIters) {
-      val relaxed = dist.filter($"d" < Inf)
-        .join(edges, dist("id") === edges("src"))
-        .groupBy($"root", $"dst").agg(min($"d" + 1L).as("dr"))
-        .select($"root".as("rroot"), $"dst", $"dr")
-      val next = dist.join(relaxed,
-          $"root" === $"rroot" && $"id" === $"dst", "left")
-        .select($"root", $"id",
-          least($"d", coalesce($"dr", lit(Inf))).as("d"), $"d".as("old"))
-        .localCheckpoint()
-      changed = next.filter($"d" =!= $"old").count()
-      dist = next.select($"root", $"id", $"d")
-      iter += 1
-    }
-    dist
-  }
+                             nodes: DataFrame, maxIters: Long): DataFrame =
+    shortestPaths(s, nodes.withColumnRenamed("id", "root"), nodes,
+      edges.withColumn("w", lit(1L)), BfsInf, maxIters)
 
   private def graphCloseness(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

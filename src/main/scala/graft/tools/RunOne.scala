@@ -11,7 +11,7 @@ object RunOne {
       case Some(n) => (args.dropRight(1).toSeq, n)
       case None    => (args.toSeq, 1)
     }
-    val spark = graft.GraftSession.local(32)
+    val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     for (name <- names; r <- 1 to reps) {
       val fn = graft.SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query: $name"))

@@ -4,8 +4,9 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampType}
 
-/** Streaming analog of ShuffleAudit (r8 VERDICT next #7): drive the
+/** Streaming state audit (r8 VERDICT next #7): drive the
   * sessionize stateful stream over the real events table in MANY
   * micro-batches (one file per trigger) and record, per batch, the
   * trigger duration and the state store's row/byte footprint — the
@@ -22,7 +23,7 @@ object StreamAudit {
     val mode = args.headOption.getOrElse("sessionize")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val chunks = sys.env.getOrElse("SPARK_GRAFT_CHUNKS", "16").toInt
-    val spark = graft.GraftSession.local(32)
+    val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
@@ -73,21 +74,15 @@ object StreamAudit {
     // runs are the with/without-TTL comparison PERFORMANCE.md records.
     val lshMode = mode.startsWith("lshindex")
     if (lshMode) {
-      import org.apache.spark.sql.types.{StructType, LongType, TimestampType}
       val epochMs = 1767225600000L
-      val horizonMs =
-        if (mode == "lshindex_nottl") Long.MaxValue / 4 else 120L * 60000L
       graft.queries.Dedup.banded48(spark, dir)
         .withColumn("ts", expr(s"timestamp_millis(${epochMs}L + doc_id * 60000L)"))
         .repartitionByRange(chunks, $"ts").sortWithinPartitions($"ts")
         .write.mode("overwrite").parquet(s"$root/src")
       graft.queries.StreamReplay.stampChronological(s"$root/src")
     }
-    val bandSchema = new org.apache.spark.sql.types.StructType()
-      .add("doc_id", org.apache.spark.sql.types.LongType)
-      .add("band", org.apache.spark.sql.types.LongType)
-      .add("bkey", org.apache.spark.sql.types.LongType)
-      .add("ts", org.apache.spark.sql.types.TimestampType)
+    val bandSchema = new StructType().add("doc_id", LongType)
+      .add("band", LongType).add("bkey", LongType).add("ts", TimestampType)
 
     val t0 = System.nanoTime()
     val src = spark.readStream

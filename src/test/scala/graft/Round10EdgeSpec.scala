@@ -67,6 +67,32 @@ class Round10EdgeSpec extends AnyFunSuite {
       ("CANADA", 1L, 0L, 0L, -1L)), got.toString)
   }
 
+  test("graph_sssp: a light two-hop path beats a heavier direct edge; unreachable is -1") {
+    // edges (weight = MIN(l_quantity) per nation pair): 0→1 min(2,7) = 2,
+    // 1→2 = 3, 0→2 = 10, 3→0 = 1. From 0: d(1) = 2, d(2) = min(10, 2+3)
+    // = 5; nation 3 only has an OUT edge, so it is unreachable (-1).
+    val dir = Files.createTempDirectory("r10sssp").toString
+    Seq((0L, "ALGERIA"), (1L, "BRAZIL"), (2L, "CANADA"), (3L, "DENMARK"))
+      .toDF("n_nationkey", "n_name").coalesce(1)
+      .write.parquet(s"$dir/nation.parquet")
+    Seq((1L, 0L), (2L, 1L), (3L, 3L)).toDF("c_custkey", "c_nationkey").coalesce(1)
+      .write.parquet(s"$dir/customer.parquet")
+    Seq((1L, 1L), (2L, 2L), (4L, 0L)).toDF("s_suppkey", "s_nationkey").coalesce(1)
+      .write.parquet(s"$dir/supplier.parquet")
+    Seq((10L, 1L), (20L, 2L), (30L, 3L)).toDF("o_orderkey", "o_custkey").coalesce(1)
+      .write.parquet(s"$dir/orders.parquet")
+    Seq((10L, 1L, 2.0), (10L, 1L, 7.0), (10L, 2L, 10.0), (20L, 2L, 3.0), (30L, 4L, 1.0))
+      .toDF("l_orderkey", "l_suppkey", "l_quantity").coalesce(1)
+      .write.parquet(s"$dir/lineitem.parquet")
+    val got = SparkEntry.queries("graph_sssp")(spark, dir)
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    assert(got == Seq(
+      ("DENMARK", -1L),
+      ("ALGERIA", 0L),
+      ("BRAZIL", 2L),
+      ("CANADA", 5L)), got.toString)
+  }
+
   test("graph_betweenness: the middle of a directed path carries the only s→t pair") {
     // 0→1→2: the sole (s,t) pair with an intermediary is (0,2) through
     // node 1 (σ01·σ12/σ02 = 1 → 1e6 micro); endpoints carry nothing.
